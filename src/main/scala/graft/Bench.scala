@@ -64,37 +64,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Whole-stage-codegen COMPILE reuse (guide §1.2 "per-task work",
-      // measured r21): the generated-class cache holds 100 entries by
-      // default, and a 272-query suite cycles far more distinct stage
-      // sources than that — every pass recompiled nearly every stage
-      // (Janino ~50-200 ms each; the warmup pass's compilations were
-      // evicted before the timed passes ran). 8192 entries keeps the
-      // whole suite's stages resident (~tens of MB of classes). The
-      // stage-ID-in-class-name default additionally made IDENTICAL
-      // stage code cache-miss whenever it planned under a different
-      // stage id — the id is debugging cosmetics, off here. Measured
-      // on the worst drain query: 16.4 → 10.3 s; A/B with codegen
-      // disabled confirms compilation, not execution, was the cost
-      // (interpreted mode is SLOWER once the cache holds). Both are
-      // scale-honest: compile storms cost the same on real executors.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // fork-free streaming checkpoint commits on the local fs — see
-      // GraftSession.builder for the full rationale (the FileContext
-      // default shells out a `readlink` per committed checkpoint file
-      // when libhadoop is absent, and the 4.1 checksum wrapper doubles
-      // the files; both knobs env-overridable for HDFS/S3 deployments)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      .config(GraftSession.engineConf)
       // reap unreferenced checkpoint/broadcast/shuffle blocks promptly:
       // the ContextCleaner only runs on driver GC, whose default
       // periodic trigger is 30 MINUTES — far longer than this run, so

@@ -26,24 +26,8 @@ object ProfileQuery {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // fork-free streaming checkpoint commits on the local fs — see
-      // GraftSession.builder for the full rationale (the FileContext
-      // default shells out a `readlink` per committed checkpoint file
-      // when libhadoop is absent, and the 4.1 checksum wrapper doubles
-      // the files; both knobs env-overridable for HDFS/S3 deployments)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      .config(GraftSession.engineConf)
     // A/B hook: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2" layers arbitrary
     // conf over the Bench-identical session — the empirical loop of
     // guide §1.1 without recompiling per hypothesis

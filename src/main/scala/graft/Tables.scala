@@ -33,7 +33,7 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = read(s, d, "lineitem")
   /** events.ts is parquet TIMESTAMP(NANOS), which Spark can only read as
     * long nanos (spark.sql.legacy.parquet.nanosAsLong — set by
-    * [[GraftSession]]/Verify/Bench). Convert to TimestampType here with
+    * [[GraftSession.engineConf]]). Convert to TimestampType here with
     * integral FLOOR division (a double-precision divide on ~1.7e18 nanos
     * would be off by hundreds of ns, and a truncating `div` would round
     * pre-1970 negative nanos 1 µs too high where DuckDB's `epoch_ns//1000`

@@ -10,24 +10,7 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // codegen-compile reuse across the 272-query dump (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // fork-free streaming checkpoint commits on the local fs — see
-      // GraftSession.builder for the full rationale (the FileContext
-      // default shells out a `readlink` per committed checkpoint file
-      // when libhadoop is absent, and the 4.1 checksum wrapper doubles
-      // the files; both knobs env-overridable for HDFS/S3 deployments)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      .config(GraftSession.engineConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

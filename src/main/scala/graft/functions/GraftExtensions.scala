@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `SELECT vector_cosine(embedding, q) FROM …` works from plain SQL once
   * the session is built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (set by
-  * [[graft.GraftSession]], Verify, and Bench).
+  * [[graft.GraftSession.engineConf]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -456,7 +456,6 @@ object StreamOps {
   private[this] var tickSaved: Seq[(org.apache.spark.sql.SparkSession, String)] = Nil
 
   private[graft] def tickConf[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    if (sys.env.contains("GRAFT_TICK_AQE_KEEP")) return body // A/B escape hatch
     // a foreachBatch body sees TWO sessions: the micro-batch CLONE
     // (batch.sparkSession) and the outer session the stores were
     // constructed against — actions go through whichever session owns
